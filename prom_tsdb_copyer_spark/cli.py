@@ -32,11 +32,13 @@ from datetime import datetime
 
 
 def parse_duration_ms(s: str) -> int:
-    """Go-style duration strings: 24h, 2h30m, 15s, 500ms, 1d (extension).
+    """Duration strings in a strict subset of Go's time.ParseDuration:
+    24h, 2h30m, 15s, 500ms, plus 1d (an extension Go lacks).
 
-    The whole string must be a sequence of <int><unit> tokens -- Go's
-    time.ParseDuration errors on malformed input like "2x3h", which the
-    old findall-only loop silently read as 3h (VERDICT r8 nit #4)."""
+    The whole string must be a sequence of <unsigned int><unit> tokens,
+    units d/h/m/s/ms, or the bare "0". Go also accepts fractions
+    ("1.5h"), a sign ("-2h") and the us/µs/ns units; those are rejected
+    here, as is malformed input like "2x3h" (Go errors on it too)."""
     if s == "0":
         return 0
     units = {"d": 86400000, "h": 3600000, "m": 60000, "s": 1000, "ms": 1}

@@ -20,6 +20,8 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
+from ..sources.tables import read_tier
+
 
 def compact_partitions(
     spark: SparkSession,
@@ -55,7 +57,7 @@ def compact_partitions(
             continue
         staging = part.with_name(".compact-tmp." + part.name)
         (
-            spark.read.parquet(str(part))
+            read_tier(spark, str(part))
             .coalesce(target_files_per_partition)
             .write.mode("overwrite")
             .parquet(str(staging))

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..matchers import matchers_predicate
+from ..sources.tables import read_tier
 from .windows import TIER_MS
 
 
@@ -334,7 +335,7 @@ def read_tier_auto(
     import os
 
     tier = pick_tier(step_ms, tiers)
-    df = spark.read.parquet(os.path.join(out_root, f"tier={tier}"))
+    df = read_tier(spark, os.path.join(out_root, f"tier={tier}"))
     if from_ms is not None or to_ms is not None:
         lo = from_ms if from_ms is not None else 0
         hi = to_ms if to_ms is not None else (1 << 53)
@@ -463,7 +464,7 @@ def query_instant(
     hi_start = ((int(t_ms) + 1) // g - 1) * g
     n_buckets = max(int(lookback_ms) // g, 1)
     lo_start = hi_start - (n_buckets - 1) * g
-    df = spark.read.parquet(os.path.join(out_root, f"tier={finest}"))
+    df = read_tier(spark, os.path.join(out_root, f"tier={finest}"))
     df = df.where(
         F.col("part_day").between(
             F.to_date(F.timestamp_millis(F.lit(lo_start))),

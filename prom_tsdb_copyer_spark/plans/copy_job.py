@@ -23,6 +23,7 @@ is exactly why the block-equality invariant holds by construction.
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -34,6 +35,10 @@ from ..operators.rollup import cascade
 from ..operators.windows import in_time_range, time_range_pred
 
 TRANSCRIPT_SERIES = ["conv_id", "role", "tool"]
+
+#: key of `run_and_write_rollups`' result holding the finest tier's
+#: sum(cnt): the number of input samples the write rolled up
+SAMPLES = "samples"
 
 
 @dataclass(frozen=True)
@@ -132,15 +137,35 @@ def run_and_write_rollups(
     already-written 1h partials, so per-window cost stays O(window), not
     O(table).
 
-    Returns {tier: rows written} when `collect_counts=True`; with the
-    default `collect_counts=False` it returns `{}` and callers read sink
-    row counts from the manifest/tier tables instead (no count jobs)."""
-    import os
+    Returns the rows each write produced, as the write job itself
+    observed them (`DataFrame.observe`, no count job and no read-back):
+    `{tier: rows, "chunks=<t>": rows, SAMPLES: samples}`, where
+    `SAMPLES` is the finest tier's sum(cnt) (sum(hist_count) for
+    histograms) -- each input sample lands in exactly one finest bucket,
+    so it counts the samples that passed the filters. A tier skipped
+    because the finest tier is empty reads 0. `collect_counts` is kept
+    for old callers only; it no longer selects a code path."""
+    from pyspark.sql import Observation
 
     from ..operators.rollup import reaggregate
     from ..operators.rollup import rollup as _rollup
     from ..operators.windows import TIER_MS
-    from ..sources.tables import write_tier
+    from ..sources.tables import read_tier, write_tier
+
+    # single-shuffle clustered aggregation: chunks-per-partition trades
+    # hash-placement balance (more, smaller chunks) against day-dir
+    # contiguity of each task's output (fewer, larger chunks -> fewer
+    # parquet files). 16 scattered each task across ~15 day dirs at
+    # bench extent (938 ~0.5MB files/tier); 8 halves the file count for
+    # a marginally wider load spread and won 5/5 interleaved reps by
+    # ~10% wall (BENCH.md r4); 4 was not reliably better than 8.
+    chunks_per_part = _env_int("TIER_CHUNKS_PER_PART", 8, minimum=1)
+    # scale-adaptive: tracks the session's parallelism (2x for straggler
+    # slack); TIER_CLUSTER_PARTS pins it for A/Bs and cluster tuning
+    # (0 = auto)
+    n_parts = _env_int("TIER_CLUSTER_PARTS", 0, minimum=0) or max(
+        2 * spark.sparkContext.defaultParallelism, 8
+    )
 
     series = [c for c in job.series_cols if c in df.columns] + [
         c for c in _appended_names(job) if c not in job.series_cols
@@ -182,22 +207,7 @@ def run_and_write_rollups(
             d, series, job.value_col, t, job.ts_col, cluster=cl
         )
         reagg = lambda d, t, cl: reaggregate(d, series, t, cluster=cl)  # noqa: E731
-
-    # single-shuffle clustered aggregation: chunks-per-partition trades
-    # hash-placement balance (more, smaller chunks) against day-dir
-    # contiguity of each task's output (fewer, larger chunks -> fewer
-    # parquet files). 16 scattered each task across ~15 day dirs at
-    # bench extent (938 ~0.5MB files/tier); 8 halves the file count for
-    # a marginally wider load spread and won 5/5 interleaved reps by
-    # ~10% wall (BENCH.md r4); 4 was not reliably better than 8.
-    import os as _os
-
-    chunks_per_part = int(_os.environ.get("TIER_CHUNKS_PER_PART", "8"))
-    # scale-adaptive: tracks the session's parallelism (2x for straggler
-    # slack); TIER_CLUSTER_PARTS pins it for A/Bs and cluster tuning
-    n_parts = int(
-        _os.environ.get("TIER_CLUSTER_PARTS", "0")
-    ) or max(2 * spark.sparkContext.defaultParallelism, 8)
+    samples_col = "hist_count" if kind == "histogram" else "cnt"
 
     def cluster_of(hint):
         if hint is None:
@@ -205,6 +215,19 @@ def run_and_write_rollups(
         lo, hi = int(hint[0]), int(hint[1])
         return (lo, max((hi - lo + 1) // (chunks_per_part * n_parts), 1),
                 n_parts)
+
+    def write(tier_df, path, sums=(), pre_clustered=False) -> dict:
+        """write_tier, returning what the write itself observed: `rows`
+        plus the sum of each column in `sums` (one Observation per
+        write -- an Observation cannot be reused)."""
+        obs = Observation()
+        write_tier(
+            tier_df, path, mode=mode, range_hint=range_hint,
+            pre_clustered=pre_clustered, sort_labels=series,
+            observe=(obs, F.count(F.lit(1)).alias("rows"),
+                     *[F.sum(c).alias(c) for c in sums]),
+        )
+        return obs.get
 
     rows: dict[str | int, int] = {}
     prev_path = None
@@ -227,10 +250,9 @@ def run_and_write_rollups(
                 # same key convention as the normal path (rows[tier]):
                 # int-ms tiers must not land as str keys (ADVICE r3)
                 for t in job.tiers[i:]:
-                    if collect_counts:
-                        rows[t] = 0
+                    rows[t] = 0
                 break
-            prev = spark.read.parquet(prev_path).drop("part_day")
+            prev = read_tier(spark, prev_path).drop("part_day")
             if range_ms is not None:
                 tier_ms = TIER_MS[tier] if isinstance(tier, str) else int(tier)
                 lo = (range_ms[0] // tier_ms) * tier_ms
@@ -238,12 +260,11 @@ def run_and_write_rollups(
                 prev = prev.where(F.col("bucket_ms").between(lo, hi))
             tier_df = reagg(prev, tier, cl)
         path = os.path.join(out_root, f"tier={tier}")
-        write_tier(
-            tier_df, path, mode=mode, range_hint=range_hint,
-            pre_clustered=cl is not None, sort_labels=series,
-        )
-        if collect_counts:
-            rows[tier] = spark.read.parquet(path).count()
+        seen = write(tier_df, path, sums=(samples_col,) if i == 0 else (),
+                     pre_clustered=cl is not None)
+        rows[tier] = seen["rows"]
+        if i == 0:
+            rows[SAMPLES] = int(seen[samples_col] or 0)
         prev_path = path
 
     # Gorilla chunk tables: the per-series compressed raw points at the
@@ -261,11 +282,22 @@ def run_and_write_rollups(
             filtered, series, tier, value_col=job.value_col, ts_col=job.ts_col
         )
         path = os.path.join(out_root, f"chunks={tier}")
-        write_tier(chunks, path, mode=mode, range_hint=range_hint,
-                   sort_labels=series)
-        if collect_counts:
-            rows[f"chunks={tier}"] = spark.read.parquet(path).count()
+        rows[f"chunks={tier}"] = write(chunks, path)["rows"]
     return rows
+
+
+def _env_int(name: str, default: int, minimum: int) -> int:
+    """Integer env knob, validated before any Spark work: a malformed or
+    out-of-range value raises instead of surfacing later as a division
+    by zero or a negative partition count."""
+    raw = os.environ.get(name, str(default))
+    try:
+        value = int(raw)
+    except ValueError:
+        value = None
+    if value is None or value < minimum:
+        raise ValueError(f"{name} must be an integer >= {minimum}, got {raw!r}")
+    return value
 
 
 def sliced_rollup(

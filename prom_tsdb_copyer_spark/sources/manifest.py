@@ -100,23 +100,15 @@ class ResumableRollup:
         block_ms: int = DAY_MS,
         run_id: str = "run-0",
         source_path: str | None = None,
-        collect_counts: bool = True,
     ):
         self.job = job
         self.out_root = out_root
         self.block_ms = block_ms
         self.run_id = run_id
         self.source_path = source_path
-        #: per-window output row counts in the manifest cost one extra
-        #: job per tier per window; disable for throughput-critical runs
-        #: (lineage keeps rows_in + timings either way)
-        self.collect_counts = collect_counts
 
     def run(self, df: DataFrame, from_ms: int, to_ms: int, fail_at: int | None = None):
-        from pyspark.sql import functions as F
-
         from ..operators.windows import time_range_pred
-        from ..plans.copy_job import run_and_write_rollups
 
         spark = df.sparkSession
 
@@ -168,57 +160,18 @@ class ResumableRollup:
         return {"done": done, "skipped": skipped, "windows": len(windows)}
 
     def _run_window(self, spark, sliced: DataFrame, w) -> tuple[int, dict]:
-        """One window's write + bookkeeping. rows_in is derived from the
-        written finest tier's sum(cnt) -- each raw sample lands in exactly
-        one finest bucket, so sum(cnt) == input rows WITHOUT the extra
-        full pass over the raw slice the old `sliced.count()` paid (at
-        100TB the raw slice is the expensive side; the tier is ~1000x
-        smaller). One read-back per tier only when collect_counts."""
-        import os
+        """One window's write + bookkeeping. Both counts come from the
+        writes themselves (`run_and_write_rollups` observes each sink):
+        rows_in is the finest tier's sum(cnt) -- each raw sample lands in
+        exactly one finest bucket, so it equals the samples that passed
+        the filters without a pass over the raw slice -- and rows_out is
+        each table's written row count. No job re-reads what was
+        written; an all-filtered window records honest zeros."""
+        from ..plans.copy_job import SAMPLES, run_and_write_rollups
 
-        from pyspark.sql import functions as F
-
-        from ..operators.windows import TIER_MS
-        from ..plans.copy_job import run_and_write_rollups
-
-        def in_window(tier) -> F.Column:
-            # widen the lower bound to the tier's bucket grid: a clamped
-            # first/last window (non-aligned global extent) still owns the
-            # partial leading bucket its samples landed in
-            t_ms = TIER_MS[tier] if isinstance(tier, str) else int(tier)
-            lo = (w.start_ms // t_ms) * t_ms
-            return F.col("bucket_ms").between(lo, w.end_ms)
-
-        run_and_write_rollups(
+        rows = run_and_write_rollups(
             spark, sliced, self.job, self.out_root,
-            range_ms=(w.start_ms, w.end_ms), collect_counts=False,
+            range_ms=(w.start_ms, w.end_ms),
         )
-        finest = os.path.join(self.out_root, f"tier={self.job.tiers[0]}")
-        # an all-filtered window writes NO parquet files (dynamic
-        # overwrite with zero partitions); schema inference on the empty
-        # dir would raise -- record an honest zero instead (ADVICE r2)
-        from pathlib import Path
-
-        if not any(Path(finest).rglob("*.parquet")):
-            return 0, ({str(self.job.tiers[0]): 0} if self.collect_counts else {})
-        tier_df = spark.read.parquet(finest).where(in_window(self.job.tiers[0]))
-        # float tiers carry `cnt`; histogram tiers carry `hist_count`
-        cnt_col = "cnt" if "cnt" in tier_df.columns else "hist_count"
-        agg = (
-            tier_df.agg(F.sum(cnt_col).alias("s"), F.count("*").alias("c"))
-            .collect()[0]
-        )
-        rows_in = int(agg["s"] or 0)
-        rows_out = {}
-        if self.collect_counts:
-            rows_out[str(self.job.tiers[0])] = int(agg["c"])
-            rest = [("tier", t) for t in self.job.tiers[1:]] + [
-                ("chunks", t) for t in self.job.chunk_tiers
-            ]
-            for kind, t in rest:
-                path = os.path.join(self.out_root, f"{kind}={t}")
-                key = str(t) if kind == "tier" else f"chunks={t}"
-                rows_out[key] = (
-                    spark.read.parquet(path).where(in_window(t)).count()
-                )
-        return rows_in, rows_out
+        rows_in = rows.pop(SAMPLES)
+        return rows_in, {str(k): v for k, v in rows.items()}

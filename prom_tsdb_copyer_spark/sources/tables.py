@@ -67,6 +67,50 @@ def time_extent(df: DataFrame, ts_col: str = "ts") -> tuple[int, int]:
     return _ms(row["lo"]), _ms(row["hi"])
 
 
+#: footer key under which Spark's parquet writer stores the Spark schema
+#: of the rows (what Spark's own schema inference reads back first)
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _first_data_file(path: str) -> str | None:
+    """First parquet data file under `path` in sorted order, skipping the
+    `.`/`_`-prefixed files and directories Spark does not list either
+    (`_manifest`, `_SUCCESS`, compaction's `.compact-tmp.*` staging)."""
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith((".", "_")))
+        for f in sorted(files):
+            if f.endswith(".parquet") and not f.startswith((".", "_")):
+                return os.path.join(root, f)
+    return None
+
+
+def read_tier(spark: SparkSession, path: str) -> DataFrame:
+    """Read a table this engine wrote, without a schema-inference job.
+
+    The reference learns a block's shape from metadata it already wrote
+    (block metas, copyer.go:209-219); likewise every Spark-written parquet
+    file carries the Spark schema in its footer (`SPARK_SCHEMA_KEY`). It
+    is the same single footer Spark's own inference reads -- but read on
+    the driver with pyarrow instead of in a Spark job, which on small
+    tiers costs more than the scan it precedes. The `part_day` partition
+    column is still discovered from the directory names.
+
+    Falls back to plain `spark.read.parquet` (inference, and its errors
+    on an empty or missing path) when there is no local data file or the
+    footer has no Spark schema, e.g. a pandas-written file."""
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    f = _first_data_file(path)
+    footer = (pq.read_metadata(f).metadata or {}) if f else {}
+    schema = footer.get(SPARK_SCHEMA_KEY)
+    if schema is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(StructType.fromJson(json.loads(schema))).parquet(path)
+
+
 #: zstd level for tier writes: level 1 measured ~15% faster wall on the
 #: 22M-row finest-tier write for ~8% more bytes than the default (3) --
 #: the sink is the throughput-critical leg, bytes are cheap
@@ -131,6 +175,7 @@ def write_tier(
     range_hint: tuple[int, int] | None = None,
     pre_clustered: bool = False,
     sort_labels: list[str] | None = None,
+    observe: tuple | None = None,
 ) -> None:
     """Tier sink: parquet partitioned by UTC day of the bucket (the
     Iceberg `days(ts)` analog; block-duration default 24h in the
@@ -161,12 +206,22 @@ def write_tier(
     `pre_clustered=True`: the caller already produced time-clustered
     partitions (single-shuffle clustered aggregation, operators/
     rollup.py) -- skip the clustering exchange entirely and only sort
-    within partitions before the partitioned write."""
+    within partitions before the partitioned write.
+
+    `observe=(Observation, *metric columns)` collects the metrics from
+    the write job itself (`DataFrame.observe`). They are attached after
+    the clustering exchange: the range-partitioning fallback samples,
+    i.e. evaluates, its input twice, and metrics below it would count
+    every row twice."""
+
+    def observed(d: DataFrame) -> DataFrame:
+        return d.observe(*observe) if observe else d
+
     out = df.withColumn(
         "part_day", F.to_date(F.timestamp_millis(F.col("bucket_ms")))
     )
     if pre_clustered:
-        out = out.sortWithinPartitions(*_sort_cols(out, sort_labels))
+        out = observed(out).sortWithinPartitions(*_sort_cols(out, sort_labels))
         (out.write.option("partitionOverwriteMode", "dynamic")
             .option("parquet.compression.codec.zstd.level", ZSTD_LEVEL)
             .option("parquet.enable.dictionary", PARQUET_DICT)
@@ -184,19 +239,20 @@ def write_tier(
                     .cast("long"),
                 )
                 .repartition(n, "_pid")
+                .transform(observed)
                 .sortWithinPartitions(*_sort_cols(out, sort_labels))
                 .drop("_pid")
             )
         else:
-            out = out.repartitionByRange(
+            out = observed(out.repartitionByRange(
                 n, "part_day", "bucket_ms"
-            ).sortWithinPartitions(*_sort_cols(out, sort_labels))
+            )).sortWithinPartitions(*_sort_cols(out, sort_labels))
         (out.write.option("partitionOverwriteMode", "dynamic")
             .option("parquet.compression.codec.zstd.level", ZSTD_LEVEL)
             .option("parquet.enable.dictionary", PARQUET_DICT)
             .partitionBy("part_day").mode(mode).parquet(path))
     else:
-        (out.write.option("partitionOverwriteMode", "dynamic")
+        (observed(out).write.option("partitionOverwriteMode", "dynamic")
             .option("parquet.compression.codec.zstd.level", ZSTD_LEVEL)
             .option("parquet.enable.dictionary", PARQUET_DICT)
             .mode(mode).parquet(path))

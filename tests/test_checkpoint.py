@@ -138,3 +138,55 @@ def test_empty_window_records_zero_rows(spark, transcripts, tmp_path):
     entries = list(read_manifest(root).values())
     assert len(entries) == res["done"]
     assert all(e.status == "done" and e.rows_in == 0 for e in entries)
+
+
+def test_crash_inside_window_resumes_to_same_tiers(spark, transcripts, tmp_path,
+                                                  monkeypatch):
+    """A crash after the 1m sink but before the 1h sink of the first window
+    records that window as failed; the resumed run then writes the same
+    rows in every tier, and the same manifest counts, as an uninterrupted
+    run (the counts come from the writes themselves, so a half-written
+    window must not leak into them)."""
+    from pathlib import Path
+
+    import prom_tsdb_copyer_spark.sources.tables as tables
+
+    lo, hi = time_extent(transcripts)
+    job = CopyJob(tiers=("1m", "1h"))
+    base_root = str(tmp_path / "base")
+    ResumableRollup(job, base_root, DAY_MS, run_id="base").run(transcripts, lo, hi)
+
+    real = tables.write_tier
+    calls = {"n": 0}
+
+    def crash_on_second_sink(*a, **k):
+        calls["n"] += 1
+        if calls["n"] == 2:
+            raise RuntimeError("crash between the 1m and 1h sinks")
+        return real(*a, **k)
+
+    monkeypatch.setattr(tables, "write_tier", crash_on_second_sink)
+    root = str(tmp_path / "crashed")
+    with pytest.raises(RuntimeError, match="crash between"):
+        ResumableRollup(job, root, DAY_MS, run_id="crash").run(transcripts, lo, hi)
+    m = read_manifest(root)
+    assert [e.status for e in m.values()] == ["failed"]
+    assert "crash between" in next(iter(m.values())).error
+    assert Path(root, "tier=1m").is_dir() and not Path(root, "tier=1h").exists()
+
+    monkeypatch.setattr(tables, "write_tier", real)
+    stats = ResumableRollup(job, root, DAY_MS, run_id="resume").run(
+        transcripts, lo, hi
+    )
+    assert stats["skipped"] == 0 and stats["done"] == stats["windows"]
+    for tier in ("1m", "1h"):
+        pd.testing.assert_frame_equal(
+            _read_tier(spark, base_root, tier),
+            _read_tier(spark, root, tier),
+            check_dtype=False,
+        )
+    base, resumed = read_manifest(base_root), read_manifest(root)
+    assert resumed.keys() == base.keys()
+    for k, e in resumed.items():
+        assert e.status == "done"
+        assert (e.rows_in, e.rows_out) == (base[k].rows_in, base[k].rows_out)
